@@ -188,14 +188,8 @@ object Bench {
 
     // per-query executor CPU time rides the same passes as a second,
     // host-noise-immune axis (an untouched query whose wall spikes while
-    // its CPU holds flat adjudicates as box noise in one line); the bus
-    // must drain before each read — task-end events deliver async
-    val cpuListener = new org.apache.spark.graft.CpuTimeAccumulator
-    spark.sparkContext.addSparkListener(cpuListener)
-    def cpuNow(): Long = {
-      org.apache.spark.graft.BusAccess.waitUntilListenerBusEmpty(spark.sparkContext)
-      cpuListener.cpuNs.get()
-    }
+    // its CPU holds flat adjudicates as box noise in one line)
+    val cpuListener = new org.apache.spark.graft.CpuTimeAccumulator(spark.sparkContext)
 
     // Warm-up pass: executes every headline plan once so JIT + whole-stage
     // codegen class compilation + parquet footer caches are attributed to
@@ -223,13 +217,13 @@ object Bench {
       allTimed.flatMap { name =>
         if (errs.contains(name)) None
         else {
-          val c0 = cpuNow()
+          val (c0, _) = cpuListener.read()
           val t0 = System.nanoTime()
           val ok =
             try { exec(name); true }
             catch { case t: Throwable => errs.getOrElseUpdate(name, brief(t)); false }
           val elapsed = (System.nanoTime() - t0) / 1e9
-          val cpu = (cpuNow() - c0) / 1e9 // drained AFTER elapsed is fixed
+          val cpu = (cpuListener.read()._1 - c0) / 1e9 // drained AFTER elapsed is fixed
           // eager store-build seconds the gate recorded this invocation
           // (0 for gates that never call in) — drained per query so one
           // gate's scaffolding can't leak into the next
@@ -317,7 +311,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // `runMain graft.Bench q_a,q_b` restricts the timed set — local A/B
     // iteration on one query without paying the full suite. A program
     // argument, not an env var: `sbt -client` executes in the long-lived
@@ -349,26 +342,7 @@ object Bench {
           "mor_serve_total" -> morServe.filter(o),
           "retrieval_zipf_total" -> retrievalZipf.filter(o)).filter(_._2.nonEmpty)
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "org.apache.spark.sql.graft.GraftSparkSessionExtension")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // r19 measurement-bug fix: the default 100-entry codegen class
-      // cache cannot hold a multi-query application's working set, so
-      // every re-execution paid a full Janino whole-stage recompilation
-      // INSIDE task threads (measured: q_retrieval_bm25_stats 26.7 CPU /
-      // 2.48 wall with the default vs 3.9 CPU / 0.98 wall with the cache
-      // sized to fit — OPTIMIZATION_r19.md has the receipts). A
-      // long-running deployment wants compiled plans cached; this is the
-      // steady-state behavior the warm-up pass was designed to measure.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64L * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-bench")
 
     val (json0, compact, errs) = run(spark, sfDir, timed, SparkEntry.queries, extraMetrics = extras)
     // per-model timings for the engine-DAG metric (r15): ONE extra

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Optimization-round measurement tool: dumps `.explain("formatted")` for
@@ -9,8 +8,8 @@ import org.apache.spark.sql.execution.FormattedMode
   *
   *   sbt "runMain graft.PlanDump /root/testdata/sf0.1 plans/r18 before q_a,q_b"
   *
-  * Session config mirrors Bench exactly (AQE, shuffle partitions = CPUS,
-  * broadcast threshold) so the dumped plan is the plan the bench times.
+  * The session is [[GraftSession]]'s, so the dumped plan is the plan the
+  * bench and the CLI run.
   * Formatted explain shows the INITIAL plan (AQE isFinalPlan=false); join
   * strategy / exchange counts read from it are pre-AQE, which is the
   * comparable shape across changes.
@@ -23,27 +22,7 @@ object PlanDump {
       case Some(list) => list.split(",").map(_.trim).filter(_.nonEmpty).toSeq
       case None => SparkEntry.queries.keys.toSeq.sorted
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "org.apache.spark.sql.graft.GraftSparkSessionExtension")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // r19 measurement-bug fix: the default 100-entry codegen class
-      // cache cannot hold a multi-query application's working set, so
-      // every re-execution paid a full Janino whole-stage recompilation
-      // INSIDE task threads (measured: q_retrieval_bm25_stats 26.7 CPU /
-      // 2.48 wall with the default vs 3.9 CPU / 0.98 wall with the cache
-      // sized to fit — OPTIMIZATION_r19.md has the receipts). A
-      // long-running deployment wants compiled plans cached; this is the
-      // steady-state behavior the warm-up pass was designed to measure.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64L * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-plandump")
     val dir = java.nio.file.Paths.get(outDir)
     java.nio.file.Files.createDirectories(dir)
     names.foreach { name =>

@@ -51,55 +51,30 @@ object ScaleProbe {
         length(col("text")).cast("long").as("n_chars"))
   }
 
-  // executor-CPU + shuffle-record axes (r12, shared with Bench):
-  // installed by main once the session exists; until then reads 0 so
-  // `timed` stays callable. Shuffle-write records are the DETERMINISTIC
-  // axis — wall and even CPU swing with ambient load, but a plan shape
-  // either moves the rows or it doesn't.
-  private var metricsNow: () => (Long, Long) = () => (0L, 0L)
-
-  private def timed(name: String,
-                    runs: scala.collection.mutable.Buffer[(String, Double, Double, Long)],
-                    opFilter: String => Boolean = _ => true)
-                   (body: => Long): Unit = if (opFilter(name)) {
-    val (c0, s0) = metricsNow()
-    val t0 = System.nanoTime()
-    val rows = body
-    val sec = (System.nanoTime() - t0) / 1e9
-    val (c1, s1) = metricsNow()
-    val cpu = (c1 - c0) / 1e9
-    val shuf = s1 - s0
-    runs += ((name, sec, cpu, shuf))
-    println(f"[probe] $name%-28s $sec%8.2f s  cpu $cpu%8.2f s  shuffle $shuf%12d rows  ($rows rows)")
-  }
-
   def main(args: Array[String]): Unit = {
     val (numArgs, opArgs) = args.partition(_.forall(_.isDigit))
     val sizes = if (numArgs.nonEmpty) numArgs.map(_.toInt).toSeq else Seq(5000, 50000)
     val opFilter: String => Boolean =
       if (opArgs.isEmpty) _ => true else opArgs.toSet.contains
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-scale-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      // r19 measurement-bug fix: the default 100-entry codegen class
-      // cache cannot hold a multi-query application's working set, so
-      // every re-execution paid a full Janino whole-stage recompilation
-      // INSIDE task threads (measured: q_retrieval_bm25_stats 26.7 CPU /
-      // 2.48 wall with the default vs 3.9 CPU / 0.98 wall with the cache
-      // sized to fit — OPTIMIZATION_r19.md has the receipts). A
-      // long-running deployment wants compiled plans cached; this is the
-      // steady-state behavior the warm-up pass was designed to measure.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val cpuAcc = new org.apache.spark.graft.CpuTimeAccumulator
-    spark.sparkContext.addSparkListener(cpuAcc)
-    metricsNow = () => {
-      org.apache.spark.graft.BusAccess.waitUntilListenerBusEmpty(spark.sparkContext)
-      (cpuAcc.cpuNs.get(), cpuAcc.shuffleRecords.get())
+    val spark = GraftSession("graft-scale-probe")
+    // executor-CPU + shuffle-record axes (r12, shared with Bench).
+    // Shuffle-write records are the DETERMINISTIC axis — wall and even CPU
+    // swing with ambient load, but a plan shape either moves the rows or
+    // it doesn't.
+    val metrics = new org.apache.spark.graft.CpuTimeAccumulator(spark.sparkContext)
+    def timed(name: String,
+              runs: scala.collection.mutable.Buffer[(String, Double, Double, Long)],
+              opFilter: String => Boolean = _ => true)
+             (body: => Long): Unit = if (opFilter(name)) {
+      val (c0, s0) = metrics.read()
+      val t0 = System.nanoTime()
+      val rows = body
+      val sec = (System.nanoTime() - t0) / 1e9
+      val (c1, s1) = metrics.read()
+      val cpu = (c1 - c0) / 1e9
+      val shuf = s1 - s0
+      runs += ((name, sec, cpu, shuf))
+      println(f"[probe] $name%-28s $sec%8.2f s  cpu $cpu%8.2f s  shuffle $shuf%12d rows  ($rows rows)")
     }
 
     val results = scala.collection.mutable.Map.empty[Int, Seq[(String, Double, Double, Long)]]
@@ -110,7 +85,7 @@ object ScaleProbe {
       val runs = scala.collection.mutable.Buffer.empty[(String, Double, Double, Long)]
       // band cap ON (the 100 TB configuration): without it the hottest
       // band bucket at 150k docs holds 20% of the corpus and the self-
-      // join implies 1.3e9 rows (BandDiag; SCALE.md round-6 note)
+      // join implies 1.3e9 rows (SCALE.md round-6 note)
       timed("minhash_lsh_pairs", runs, opFilter)(
         ops.Dedup.minhashLshPairsPreset(docs, "doc_id", "text",
           maxBandFrequency = Some(2000)).count())

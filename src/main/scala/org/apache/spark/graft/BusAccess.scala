@@ -15,17 +15,17 @@ object BusAccess {
 }
 
 /** Accumulates executor CPU nanoseconds and shuffle-write records across
-  * all task ends — the shared measurement axes for Bench and ScaleProbe.
-  * Wall time on the bench host swings ±20% with ambient load and CPU
-  * time itself inflates 2-3× under heavy SMT contention; shuffle-write
-  * records are the fully DETERMINISTIC structural axis (a plan shape
-  * either moves the rows or it doesn't), so A/B legs comparing plan
-  * shapes read it first. Read via
-  * [[BusAccess.waitUntilListenerBusEmpty]] first: task-end events are
-  * delivered asynchronously. */
-class CpuTimeAccumulator extends org.apache.spark.scheduler.SparkListener {
-  val cpuNs = new java.util.concurrent.atomic.AtomicLong(0L)
-  val shuffleRecords = new java.util.concurrent.atomic.AtomicLong(0L)
+  * all task ends of `sc` (it registers itself) — the shared measurement
+  * axes for Bench and ScaleProbe. Wall time on the bench host swings ±20%
+  * with ambient load and CPU time itself inflates 2-3× under heavy SMT
+  * contention; shuffle-write records are the fully DETERMINISTIC
+  * structural axis (a plan shape either moves the rows or it doesn't), so
+  * A/B legs comparing plan shapes read it first. */
+class CpuTimeAccumulator(sc: SparkContext) extends org.apache.spark.scheduler.SparkListener {
+  private val cpuNs = new java.util.concurrent.atomic.AtomicLong(0L)
+  private val shuffleRecords = new java.util.concurrent.atomic.AtomicLong(0L)
+  sc.addSparkListener(this)
+
   override def onTaskEnd(
       taskEnd: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
     val m = taskEnd.taskMetrics
@@ -33,5 +33,12 @@ class CpuTimeAccumulator extends org.apache.spark.scheduler.SparkListener {
       cpuNs.addAndGet(m.executorCpuTime)
       shuffleRecords.addAndGet(m.shuffleWriteMetrics.recordsWritten)
     }
+  }
+
+  /** `(cpuNs, shuffleRecords)` so far, read after draining the bus:
+    * task-end events are delivered asynchronously. */
+  def read(): (Long, Long) = {
+    BusAccess.waitUntilListenerBusEmpty(sc)
+    (cpuNs.get(), shuffleRecords.get())
   }
 }

@@ -42,7 +42,7 @@ class GraftSourceSpec extends AnyFunSuite {
     val df = spark.read.format("graft").load(rm.path(rel).toString).select("id")
     assert(df.collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L))
     import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-    val scans = df.queryExecution.executedPlan.collect { case b: BatchScanExec => b }
+    val scans = PlanNodes.collectNodes(df) { case b: BatchScanExec => b }
     assert(scans.nonEmpty, df.queryExecution.executedPlan.toString)
     assert(scans.head.scan.readSchema().fieldNames.toSeq == Seq("id"),
       s"scan must prune to id: ${scans.head.scan.readSchema()}")

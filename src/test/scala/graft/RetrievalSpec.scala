@@ -586,11 +586,11 @@ class RetrievalSpec extends AnyFunSuite {
     // corpus-sized posting-row aggregate
     Seq(post, pos).foreach { df =>
       val plan = df.queryExecution.executedPlan
-      val aggs = plan.collect {
+      val aggs = PlanNodes.collectNodes(df) {
         case a: org.apache.spark.sql.execution.aggregate.BaseAggregateExec => a
       }
       assert(aggs.isEmpty, s"index build still aggregates: $plan")
-      val exchanges = plan.collect {
+      val exchanges = PlanNodes.collectNodes(df) {
         case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
       }
       assert(exchanges.size <= 1,
